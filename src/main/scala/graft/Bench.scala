@@ -386,9 +386,9 @@ object Bench {
     // One timed rep of the with-I/O probe; all stream_* metrics describe
     // its window. Run 3 and report the median by throughput (plus the raw
     // reps): on shared container kernels a single ~1.5 s window swings with
-    // OS thread-wake scheduling — StreamLatencyProbe measured same-JVM reps
-    // at 26.6k→65.5k t/s with max latency 537→40 ms before this change —
-    // exactly the methodology the no-I/O floor already uses.
+    // OS thread-wake scheduling — same-JVM reps measured 26.6k→65.5k t/s
+    // with max latency 537→40 ms before this change (HISTORY.md) — exactly
+    // the methodology the no-I/O floor already uses.
     val streamTasks = 50000L
     final case class StreamRep(
         tps: Double, latAvgMs: Double, latMaxMs: Double,
@@ -644,16 +644,18 @@ object Bench {
     //     forked run output through StdoutOutput (raw passthrough);
     // (b) the per-query map only existed in the huge full record, which
     //     falls outside the driver's ~2,000-char tail window.
-    // So: print the CONTRACT line ({"metric","value","unit","queries",...,
-    // "sf"}) with a compact 3-decimal per-query seconds map — a full-stdout
-    // parser gets per-query timings — IMMEDIATELY followed by the short flat
-    // summary, which is what a tail-window parser sees complete. Additive:
+    // So: print a per-query line ({"metric":"per_query","value","unit",
+    // "queries",...,"sf"}) with a compact 3-decimal per-query seconds map — a
+    // full-stdout parser gets per-query timings — IMMEDIATELY followed by the
+    // short flat CONTRACT line, which is what a tail-window parser sees
+    // complete. The per-query line carries its own metric tag so a
+    // line-oriented parser cannot mistake it for the contract line. Additive:
     // the full record, BENCH_SELF.json and the flat line are unchanged.
     val qsCompact = results.map { case (k, v) =>
       "\"" + k + "\":" + v.map(num(_, 3)).getOrElse("null")
     }.mkString("{", ",", "}")
     val perQueryLine =
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec",""" +
+      s"""{"metric":"per_query","value":${num(total, 3)},"unit":"sec",""" +
         s""""n_queries":${results.size},"n_failed":${failed.size},""" +
         s""""queries":$qsCompact,""" +
         s""""stream_tasks_per_sec":${num(tps, 1)},""" +

@@ -116,25 +116,32 @@ final class TaskPipeline[T](val tasks: Dataset[Task[T]])(implicit val enc: Encod
   def dueBy(asOfMillis: Long): TaskPipeline[T] =
     thenTransform(_.filter((t: Task[T]) => t.metadata.scheduledTimeMillis <= asOfMillis))
 
-  /** O2: co-locate equal keys (hash shuffle), ordering each partition by key
-    * then production time — the batch equivalent of per-key FIFO queues.
+  /** O2: co-locate equal keys (hash shuffle), ordering each partition by
+    * production time, then arrival — the batch equivalent of per-key FIFO
+    * queues. Each key's tasks run in timestamp order, ties in the order they
+    * arrived; different keys interleave as they do in the reference's fetch
+    * (offset) order (`DefaultSubPartitioner.java:26-58`). Clustering by key
+    * instead would stall an in-order async window
+    * ([[graft.streaming.AsyncProcessing]]) on each whole same-key chain.
     *
     * Null/empty keys have no ordering contract in the reference and are
     * routed round-robin (`RoundRobinSubPartitioner.java:26-44`) so a hot
-    * null-key stream can't pin one worker; here they scatter by a synthetic
-    * spread key instead of all hashing to the null partition.
+    * null-key stream can't pin one worker; here they scatter by their arrival
+    * sequence instead of all hashing to the null partition.
     */
   def orderedPerKey(numPartitions: Int): TaskPipeline[T] = {
     require(numPartitions > 0, s"numPartitions must be positive, got $numPartitions")
     thenTransform { ds =>
+      // assigned before the shuffle, so it records each row's input position
+      val arrival = col("__arrival")
       val spread = when(col("key").isNull || length(col("key")) === 0,
-        pmod(monotonically_increasing_id(), lit(numPartitions)).cast("string").cast("binary"))
+        pmod(arrival, lit(numPartitions)).cast("string").cast("binary"))
         .otherwise(col("key"))
-      ds.withColumn("__spread", spread)
-        .repartition(numPartitions, col("__spread"))
-        .drop("__spread")
+      ds.withColumn("__arrival", monotonically_increasing_id())
+        .repartition(numPartitions, spread)
+        .sortWithinPartitions(col("metadata.timestampMillis"), arrival)
+        .drop("__arrival")
         .as[Task[T]](enc)
-        .sortWithinPartitions(col("key"), col("metadata.timestampMillis"))
     }
   }
 }

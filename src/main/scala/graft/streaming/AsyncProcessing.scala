@@ -91,12 +91,18 @@ object CompletionPolicy {
   * PROCESS_ORDERING guarantees hold inside each partition, and cross-key work
   * overlaps freely. Back-pressure: a bounded in-flight window (results are
   * emitted in input order, so at-least-once replay semantics per micro-batch
-  * are unchanged).
+  * are unchanged). Because emission is in input order, the window waits on
+  * the slowest record at its head: feed it production-time-then-arrival
+  * order with keys interleaved, as the reference's fetch order has them
+  * ([[graft.api.TaskPipeline.orderedPerKey]]), not key-clustered runs, which
+  * would stall the window on each whole same-key chain.
   */
 object AsyncProcessing {
 
   /** Executor-JVM-wide I/O pool (shared by all partitions on the executor —
     * the analog of the reference's per-partition thread pools, sized once).
+    * Only [[mapAsyncKeyed]] dispatches onto it, so a JVM that only runs
+    * [[flatMapAsyncKeyed]] never starts it.
     * FIXED, not cached: with thousands of in-flight blocking calls a cached
     * pool finds no idle thread at submit time and pays a thread spawn per
     * task (~50 µs, which capped throughput at ~20k tasks/s); fixed threads
@@ -165,8 +171,7 @@ object AsyncProcessing {
       keyFn: T => K,
       f: T => U)(
       implicit encU: Encoder[U]): Dataset[U] =
-    asyncKeyedImpl(ds, maxInFlight, policy)(keyFn,
-      (t, ec) => Future(f(t))(ec))
+    asyncKeyedImpl(ds, maxInFlight, policy)(keyFn, t => Future(f(t))(ioPool))
 
   /** True-async variant for future-returning I/O clients (async HTTP/RPC):
     * same per-key serial chaining and in-order emission, but an in-flight
@@ -195,7 +200,7 @@ object AsyncProcessing {
       f: T => Future[U])(
       implicit encU: Encoder[U]): Dataset[U] =
     asyncKeyedImpl(ds, maxInFlight, policy)(keyFn,
-      (t, _) => try f(t) catch { case scala.util.control.NonFatal(e) => Future.failed(e) })
+      t => try f(t) catch { case scala.util.control.NonFatal(e) => Future.failed(e) })
 
   /** One in-flight record: its result future, the gate successors chain on,
     * and a release-once latch for its permit (give-up and late completion
@@ -219,7 +224,7 @@ object AsyncProcessing {
       maxInFlight: Int,
       policy: CompletionPolicy[T, U])(
       keyFn: T => K,
-      run: (T, ExecutionContext) => Future[U])(
+      run: T => Future[U])(
       implicit encU: Encoder[U]): Dataset[U] = {
     ds.mapPartitions { it =>
       // Chain GLUE — the transformWith/andThen callbacks below (permit
@@ -244,7 +249,7 @@ object AsyncProcessing {
         val gate = Promise[Unit]()
         val released = new AtomicBoolean(false)
         val fut = prev.transformWith { _ =>
-          run(t, ioPool).andThen { case _ =>
+          run(t).andThen { case _ =>
             if (!released.getAndSet(true)) permits.release()
             gate.trySuccess(())
           }

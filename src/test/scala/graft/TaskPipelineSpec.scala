@@ -116,21 +116,44 @@ class TaskPipelineSpec extends SparkTestBase {
   }
 
   test("orderedPerKey co-locates and orders each key's tasks") {
-    import spark.implicits._
-    val ordered = pipeline().orderedPerKey(4).tasks
-    // within each partition, (key, ts) must be non-decreasing
-    val violations = ordered.mapPartitions { it =>
-      var prev: Option[(Seq[Byte], Long)] = None
-      var bad = 0
-      it.foreach { t =>
-        val cur = (t.key.toSeq, t.metadata.timestampMillis)
-        prev.foreach { p =>
-          if (p._1 == cur._1 && p._2 > cur._2) bad += 1
-        }
-        prev = Some(cur)
+    // newest first: arrival runs against production time, so only the
+    // timestamp sort can put each key's tasks back in order
+    val parts = pipeline().thenTransform(_.sort(col("metadata.timestampMillis").desc))
+      .orderedPerKey(4).tasks.rdd
+      .map(t => (new String(t.key, "UTF-8"), t.metadata.timestampMillis)).glom().collect()
+    // each key lands in exactly one partition
+    val homes = parts.toSeq.flatMap(_.map(_._1).distinct)
+    assert(homes.size == homes.distinct.size, "a key spread over partitions")
+    assert(homes.size < parts.map(_.length).sum, "fixture needs keys with several tasks")
+    // within its partition, each key's timestamps never go backwards, however
+    // far apart its tasks sit
+    val violations = parts.map { p =>
+      val last = scala.collection.mutable.Map.empty[String, Long]
+      p.count { case (k, ts) =>
+        val bad = last.get(k).exists(_ > ts)
+        last(k) = ts
+        bad
       }
-      Iterator.single(bad)
-    }.collect().sum
+    }.sum
     assert(violations == 0)
+  }
+
+  test("orderedPerKey keeps arrival order when every task shares one timestamp") {
+    import spark.implicits._
+    // the shape of a rate-micro-batch drain: one input partition, one
+    // timestamp, consecutive tasks on different keys
+    val tasks = spark.createDataset((0 until 400).map { i =>
+      Task(TaskMetadata(timestampMillis = 1000L), s"k${i * 7 % 13}".getBytes("UTF-8"), i.toLong)
+    }).coalesce(1)
+    val parts = new TaskPipeline(tasks).orderedPerKey(4).tasks.rdd
+      .map(t => (new String(t.key, "UTF-8"), t.value)).glom().collect()
+    assert(parts.map(_.length).sum == 400)
+    assert(parts.map(_.map(_._1).distinct.length).sum == 13, "a key spread over partitions")
+    // each partition in arrival order: every key's tasks in input order, and
+    // keys interleaved rather than grouped
+    parts.foreach { p =>
+      val ids = p.map(_._2).toSeq
+      assert(ids == ids.sorted, s"not in arrival order: ${ids.take(20)}")
+    }
   }
 }
